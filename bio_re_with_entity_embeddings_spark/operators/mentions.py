@@ -19,11 +19,18 @@ Matching is case-insensitive (the reference's span check lowercases
 both sides) and word-boundary-delimited over ``[A-Za-z0-9_]`` so that
 ``parse_frame`` does not fire inside ``parse_frame_ext``.
 
-Scale notes: the automaton is built ONCE PER PYTHON WORKER from the
-broadcast dictionary (lazy module-global memo keyed by broadcast id),
-not per Arrow batch; the only data shuffled out of this stage is the
-mention rows themselves. No per-row Python crosses the JVM boundary —
-this is a ``mapInPandas`` iterator stage.
+Two detectors, one per job:
+
+* ``detect_entity_arrays`` (scale path): one row of packed entity codes
+  per doc. Token-only dictionaries run a batch Arrow/NumPy kernel in a
+  ``mapInArrow`` stage; a multi-token or punctuated surface selects the
+  Aho-Corasick automaton in a ``mapInPandas`` stage.
+* ``detect_mentions`` (parity path): one row per mention with its span,
+  in a ``mapInPandas`` stage.
+
+Automata are built ONCE PER PYTHON WORKER from the broadcast dictionary
+(lazy module-global memo keyed by broadcast id), not per batch. No
+per-row Python crosses the JVM boundary.
 """
 
 from __future__ import annotations
@@ -31,11 +38,8 @@ from __future__ import annotations
 from collections import deque
 from collections.abc import Iterator, Sequence
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import schemas
 
@@ -216,109 +220,6 @@ def detect_mentions(docs: DataFrame, dict_entries: Sequence[tuple[str, str, str]
     return docs.select("doc_id", "content").mapInPandas(runner, schemas.MENTIONS)
 
 
-def detect_entity_sets(
-    docs: DataFrame,
-    dict_entries: Sequence[tuple[str, str, str]],
-    entity_idx: dict[str, int],
-    type_codes: dict[str, int] | None = None,
-) -> DataFrame:
-    """Scale-path detector: per-doc DISTINCT dictionary-encoded entity
-    rows (doc_id, entity_idx int, entity_type) straight from the Arrow
-    stage. The per-doc set dedupe happens in the Python worker (a set
-    insert per hit), so the 5M+-row (doc, entity) distinct exchange the
-    generic path needs simply never exists. Spans/mention text are not
-    emitted — use ``detect_mentions`` for the annotation table.
-
-    ``entity_idx``: entity_id -> stable int index (see pipeline's
-    idx_dim); types are carried as strings (tiny dictionary column).
-
-    Matcher choice mirrors ``detect_mentions`` exactly: the C-speed
-    token-probe path ONLY when every surface is a single
-    ``[A-Za-z0-9_]+`` token (the probe can never see a multi-token or
-    punctuated surface); otherwise the boundary-checked Aho-Corasick
-    automaton with the same per-doc set dedup.
-    """
-    spark = docs.sparkSession
-    patterns = _patterns_from_entries(dict_entries)
-    if type_codes is None:
-        type_codes = {
-            t: i for i, t in enumerate(sorted({e[2] for e in dict_entries}))
-        }
-    all_token_surfaces = all(
-        s and all(ch in _WORD for ch in s) for s in patterns
-    )
-    # surface -> list[(idx, type_code)] — ints only past this point,
-    # so the join/agg keys downstream are fixed-width.
-    compact = {
-        s: [(entity_idx[eid], type_codes[et]) for eid, et in links]
-        for s, links in patterns.items()
-    }
-    bc = spark.sparkContext.broadcast(compact)
-
-    def run_tokens(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
-
-        pats = bc.value
-        token_re = re.compile(r"[a-z0-9_]+")  # over lowered content
-        findall = token_re.findall
-        get = pats.get
-        # round 6: C-level key-set intersection instead of a Python
-        # loop over every token (see detect_entity_arrays)
-        keyset = frozenset(pats)
-        intersect = keyset.intersection
-        cols = ["doc_id", "entity_idx", "type_code"]
-        for pdf in batches:
-            out: list[tuple] = []
-            for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
-                if not content:
-                    continue
-                seen: set = set()
-                update = seen.update
-                low = content.lower()
-                if len(low) == len(content):
-                    for tok in intersect(findall(low)):
-                        update(get(tok))
-                else:
-                    # rare length-changing lower(): apply the span
-                    # predicate so the entity set matches exactly the
-                    # entities detect_mentions would keep.
-                    for m in token_re.finditer(low):
-                        links = get(m.group())
-                        if links and content[m.start():m.end()].lower() == m.group():
-                            update(links)
-                out.extend((doc_id, i, t) for i, t in seen)
-            yield pd.DataFrame(out, columns=cols)
-
-    def run_trie(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pats = bc.value
-        key = ("sets", id(pats))
-        auto = _AUTOMATON_CACHE.get(key)
-        if auto is None:
-            auto = AhoCorasick({s: [] for s in pats})
-            _AUTOMATON_CACHE.clear()
-            _AUTOMATON_CACHE[key] = auto
-        cols = ["doc_id", "entity_idx", "type_code"]
-        for pdf in batches:
-            out: list[tuple] = []
-            for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
-                if not content:
-                    continue
-                seen: set = set()
-                low = content.lower()
-                safe = len(low) == len(content)
-                for b, e, surface in auto.find(content, low):
-                    if not safe and content[b:e].lower() != surface:
-                        continue
-                    seen.update(pats[surface])
-                out.extend((doc_id, i, t) for i, t in seen)
-            yield pd.DataFrame(out, columns=cols)
-
-    runner = run_tokens if all_token_surfaces else run_trie
-    return docs.select("doc_id", "content").mapInPandas(
-        runner, "doc_id string, entity_idx int, type_code int"
-    )
-
-
 def detect_entity_arrays(
     docs: DataFrame,
     dict_entries: Sequence[tuple[str, str, str]],
@@ -337,8 +238,12 @@ def detect_entity_arrays(
 
     ``max_entities_per_doc`` > 0 truncates each doc's (sorted) set —
     the hub-doc bound: one row explodes to at most cap^2 pairs.
-    Matcher choice mirrors ``detect_mentions`` (token probe only for
-    single-word-token surfaces, Aho-Corasick otherwise)."""
+
+    When every surface is a single ``[A-Za-z0-9_]+`` token the stage is
+    ``mapInArrow`` over the batch kernel ``run_tokens_arrow``; otherwise
+    it is ``mapInPandas`` over the boundary-checked Aho-Corasick
+    automaton. Both keep the span predicate of ``detect_mentions``.
+    tests/test_plan_quality.py pins which stage each dictionary gets."""
     spark = docs.sparkSession
     patterns = _patterns_from_entries(dict_entries)
     if type_codes is None:
@@ -369,16 +274,13 @@ def detect_entity_arrays(
         import pyarrow.compute as pc
 
         pats = bc.value
-        # Round 6 (guide §4.2 — batch-level native kernels, zero
-        # per-token AND zero per-doc Python on the hot path): the
-        # previous per-doc findall + set.intersection MATERIALIZED
-        # every token (and every content string, via the pandas
-        # conversion) as a Python object — ~600M token strings at the
-        # 500k-file bench.  This is now a ``mapInArrow`` stage: content
-        # stays an Arrow buffer end to end; tokenization is a C-level
-        # split; the dictionary probe is one ``index_in`` hash lookup
-        # per token; link expansion + per-doc sorted distinct sets are
-        # NumPy CSR ops + one np.unique.
+        # No per-token and no per-doc Python for ASCII docs: a per-doc
+        # findall would materialize every token (and, through pandas,
+        # every content string) as a Python object. Content stays an
+        # Arrow buffer end to end; tokenization is a C-level split; the
+        # dictionary probe is one ``index_in`` hash lookup per token;
+        # link expansion + per-doc sorted distinct sets are NumPy CSR
+        # ops + one np.unique.
         #
         # Tokenizer tiering (bit-identical to ``[a-z0-9_]+`` runs):
         #   * CLEAN docs — lowered bytes all in [a-z0-9_ ] (checked by
@@ -403,29 +305,26 @@ def detect_entity_arrays(
         )
         token_re = re.compile(r"[a-z0-9_]+")
         get = pats.get
+        keyset = frozenset(pats)
         clean_lut = np.zeros(256, dtype=bool)
         for ch in "abcdefghijklmnopqrstuvwxyz0123456789_ ":
             clean_lut[ord(ch)] = True
 
         def fallback(doc_id, content, out):
-            # exact pre-vectorization per-doc logic (non-ASCII docs)
+            # exact per-doc token probe (non-ASCII docs)
             low = content.lower()
+            seen: set = set()
             if len(low) == len(content):
-                seen: set = set()
-                for tok in frozenset(pats).intersection(
-                    token_re.findall(low)
-                ):
+                for tok in keyset.intersection(token_re.findall(low)):
                     seen.update(get(tok))
-                if seen:
-                    out.append(emit(doc_id, seen))
             else:
-                seen = set()
+                # length-changing lower(): apply the span predicate
                 for m in token_re.finditer(low):
                     links = get(m.group())
                     if links and content[m.start():m.end()].lower() == m.group():
                         seen.update(links)
-                if seen:
-                    out.append(emit(doc_id, seen))
+            if seen:
+                out.append(emit(doc_id, seen))
 
         def probe(strings, orig_idx):
             """index_in over the tokens of ``strings``; returns
@@ -455,17 +354,6 @@ def detect_entity_arrays(
             [("doc_id", pa.string()), ("ets", pa.list_(pa.int32()))]
         )
 
-        # Drain the ENTIRE input stream before computing (round 6):
-        # Spark's merged reader/writer feeds input over a non-blocking
-        # channel with a busy write loop, so while this worker holds
-        # the GIL computing a batch, the JVM task thread SPINS on the
-        # full socket buffer — measured ~100-250 CPU-seconds of
-        # executor spin per 500k-file pipeline rep (stage cpuT 18 s on
-        # reps where workers kept up vs 112-145 s where they didn't).
-        # Buffering first (~25 MB/task at bench scale — input is
-        # (doc_id, content) only) keeps the reads back-to-back, so the
-        # writer always completes and parks in its selector instead.
-        batches = list(batches)
         for batch in batches:
             docid_arr = batch.column(0)
             content = batch.column(1)
@@ -594,98 +482,6 @@ def detect_entity_arrays(
             yield pd.DataFrame(out, columns=["doc_id", "ets"])
 
     src = docs.select("doc_id", "content")
-    if all_token_surfaces and os.environ.get(
-        "SPARK_GRAFT_DETECTOR", "arrow"
-    ) == "jvm":
-        # Alternate pure-JVM boundary (guide §4.1 — built-ins over any
-        # Python path), kept behind SPARK_GRAFT_DETECTOR=jvm: for
-        # ASCII docs the whole kernel is expressible in codegen'd JVM
-        # expressions — translate+split tokenization, explode the
-        # per-doc distinct tokens, broadcast-hash-join the
-        # (token -> codes) dictionary, one collect/flatten/distinct/
-        # sort aggregate per doc.  It removes the JVM->Python Arrow
-        # stream entirely (measured: box-wide SYSTEM-time storms from
-        # the PythonRunner socket write path vanish, 0 storm samples),
-        # but costs ~16x the Arrow kernel's CPU on the probe/aggregate
-        # side — 500k-file pipeline 55-98 s vs the Arrow path's
-        # 16-60 s — so the Arrow kernel stays the default.  Non-ASCII
-        # docs (where JVM lower() and Python str.lower() can diverge)
-        # keep the exact Arrow-kernel path in either mode.
-        rows = [
-            (tok, [int(v) for v in vals])
-            for tok, vals in sorted(compact.items())
-        ]
-        dict_df = spark.createDataFrame(rows, "token string, codes array<int>")
-        is_ascii = F.col("content").isNull() | (
-            F.octet_length("content") == F.length("content")
-        )
-        # Tokenizer: translate() every non-word ASCII char to a space
-        # (a linear per-char map), then split on the literal single
-        # space — measured 80x faster than split on the
-        # "[^a-z0-9_]+" regex (String.split's per-token Matcher
-        # substring churn: 69 s vs 0.9 s for the 50k-doc corpus) and
-        # token-identical for ASCII docs (runs of non-word chars
-        # become runs of spaces; the empties they split into are
-        # dropped below).  The token array is materialized in its OWN
-        # projection before the explode: Generate performs no
-        # common-subexpression elimination, so an expression inside
-        # explode() is re-run once per EMITTED row (the count-min md5
-        # lesson from earlier this round).
-        nonword = "".join(
-            chr(c)
-            for c in range(128)
-            if chr(c) not in "abcdefghijklmnopqrstuvwxyz0123456789_ "
-        )
-        hits = (
-            src.where(is_ascii)
-            .select(
-                "doc_id",
-                F.array_distinct(
-                    F.split(
-                        F.translate(
-                            F.lower(F.col("content")),
-                            nonword,
-                            " " * len(nonword),
-                        ),
-                        " ",
-                        -1,
-                    )
-                ).alias("toks"),
-            )
-            .select("doc_id", F.explode("toks").alias("t"))
-            .where(F.col("t") != "")
-            .join(F.broadcast(dict_df), F.col("t") == F.col("token"))
-            .select("doc_id", "codes")
-        )
-        jvm_out = hits.groupBy("doc_id").agg(
-            F.sort_array(
-                F.array_distinct(F.flatten(F.collect_list("codes")))
-            ).alias("ets")
-        )
-        if cap > 0:
-            jvm_out = jvm_out.withColumn("ets", F.slice("ets", 1, cap))
-        py_out = src.where(~is_ascii).mapInArrow(
-            run_tokens_arrow, "doc_id string, ets array<int>"
-        )
-        return jvm_out.unionByName(py_out)
+    if all_token_surfaces:
+        return src.mapInArrow(run_tokens_arrow, "doc_id string, ets array<int>")
     return src.mapInPandas(run_trie, "doc_id string, ets array<int>")
-
-
-def detect_mentions_native(docs: DataFrame, dict_df: DataFrame) -> DataFrame:
-    """Pure-DataFrame mention finder (no spans): broadcast the dictionary,
-    word-boundary ``contains`` via padded LIKE. Oracle-checkable in ANSI
-    SQL; used for DuckDB cross-validation of the trie stage at doc/entity
-    granularity (the trie stage is the scale path — one scan instead of
-    |dict| LIKE probes).
-    """
-    padded = F.concat(F.lit(" "), F.lower(F.col("content")), F.lit(" "))
-    return (
-        docs.crossJoin(F.broadcast(dict_df))
-        .where(
-            F.contains(
-                padded, F.concat(F.lit(" "), F.lower(F.col("surface")), F.lit(" "))
-            )
-        )
-        .select("doc_id", "entity_id", "entity_type", F.col("surface").alias("mention"))
-        .distinct()
-    )

@@ -198,6 +198,21 @@ def _build_parity(
     }
 
 
+def entity_dim(spark: SparkSession, entity_idx: dict[str, int]) -> DataFrame:
+    """(idx int, entity_id string) rows of the driver-side entity index.
+
+    Built from an Arrow table, which plans as a LocalRelation: a Python
+    list would go through ``parallelize`` and run a Python-RDD job every
+    time a plan reading the dim executes."""
+    import pyarrow as pa
+
+    table = pa.table({
+        "idx": pa.array(list(entity_idx.values()), pa.int32()),
+        "entity_id": pa.array(list(entity_idx), pa.string()),
+    })
+    return spark.createDataFrame(table, "idx int, entity_id string")
+
+
 def _build_scale(
     spark, docs, dict_entries, entities, embeddings, cfg
 ) -> dict[str, DataFrame]:
@@ -209,9 +224,7 @@ def _build_scale(
         r["entity_id"] for r in entities.select("entity_id").distinct().collect()
     )
     entity_idx = {eid: i + 1 for i, eid in enumerate(ids)}
-    idx_dim = spark.createDataFrame(
-        [(i, eid) for eid, i in entity_idx.items()], "idx int, entity_id string"
-    )
+    idx_dim = entity_dim(spark, entity_idx)
     all_types = sorted({e[2] for e in dict_entries})
     type_codes = {t: i for i, t in enumerate(all_types)}
 

@@ -7,8 +7,9 @@ pipeline's plan shape:
 
 * AQE + skew-join: the co-occurrence pair join is hub-skewed
   (SURVEY.md section 4.2).
-* Arrow on: the mention detector and scoring kernel are pandas-UDF
-  stages; no per-row Python anywhere.
+* Arrow on: the scale-path mention detector is a ``mapInArrow`` stage
+  (``mapInPandas`` for multi-token dictionaries) and the scoring kernel
+  a pandas UDF; no per-row Python anywhere.
 * shuffle.partitions sized to cores for local mode (overridable).
 """
 

@@ -208,16 +208,14 @@ def incremental_triples(
     ``streaming_triple_emitter`` for semantics and the drain caveat).
     """
     from ..operators.mentions import detect_entity_arrays
-    from ..plans.pipeline import ingest
+    from ..plans.pipeline import entity_dim, ingest
 
     spark = corpus_stream.sparkSession
     ids = sorted({e[1] for e in dict_entries})
     entity_idx = {eid: i + 1 for i, eid in enumerate(ids)}
     all_types = sorted({e[2] for e in dict_entries})
     type_codes = {t: i for i, t in enumerate(all_types)}
-    idx_dim = spark.createDataFrame(
-        [(i, eid) for eid, i in entity_idx.items()], "idx int, entity_id string"
-    )
+    idx_dim = entity_dim(spark, entity_idx)
 
     arrs = detect_entity_arrays(
         ingest(corpus_stream), dict_entries, entity_idx, type_codes

@@ -1,8 +1,9 @@
 """Round-6 optimization pin: the Arrow/NumPy batch kernel inside
 ``detect_entity_arrays`` (ascii_lower -> split_pattern_regex ->
 index_in -> CSR link expansion -> np.unique) must be bit-identical to
-the per-doc Python token probe it replaced — including the ASCII guard
-(non-ASCII docs fall back to the per-doc path), the per-doc sorted
+the per-doc Python token probe it replaced — including all three
+tokenizer tiers (clean single-space docs, other ASCII docs, non-ASCII
+docs on the per-doc fallback path), the per-doc sorted
 distinct ``ets`` order, the hub cap, ambiguous surfaces (one token ->
 several links), None/empty content, and docs with zero hits.
 """
@@ -71,6 +72,8 @@ def test_vectorized_equals_reference(spark, cap):
     for i in range(300):
         n = rng.randint(0, 30)
         text = " ".join(rng.choice(VOCAB) for _ in range(n))
+        if i % 5 == 0:
+            text = text.replace(" ", ".(").title()  # ASCII regex-split tier
         if i % 11 == 0:
             text = "İ " + text  # non-ASCII -> per-doc fallback branch
         if i % 13 == 0:

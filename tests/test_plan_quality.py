@@ -3,9 +3,12 @@
 
 * parquet scans push filters and prune columns,
 * dimension joins broadcast,
-* the pipeline's trie stage is computed once (cache reuse),
+* the pipeline's detector stage is computed once (cache reuse),
+* the scale detector runs the Arrow kernel (``MapInArrow``) for
+  token-only dictionaries and Aho-Corasick (``MapInPandas``) otherwise,
 * no per-row Python UDFs anywhere in the package (north-star rule) —
-  only Arrow (pandas_udf / mapInPandas) stages.
+  only Arrow (pandas_udf / mapInArrow / mapInPandas) stages,
+* no environment variable selects a detector.
 """
 
 from __future__ import annotations
@@ -55,13 +58,51 @@ def test_pipeline_mention_stage_cached(spark):
     out = pipeline.build_triples(spark, corpus, d, emb)
     plan = plan_of(out["triples"])
     # every relation side reads the MATERIALIZED mention table, not a
-    # fresh trie scan. Round 6: the dedup hub is localCheckpoint'ed
-    # (plans compile against a LogicalRDD -> "Scan ExistingRDD"), so
-    # accept either materialized form; the invariant is that NO
-    # MapInPandas detector stage survives into the triples plan.
+    # fresh detector scan. The dedup hub is localCheckpoint'ed (plans
+    # compile against a LogicalRDD -> "Scan ExistingRDD"), so accept
+    # either materialized form; the invariant is that NO detector stage
+    # (MapInPandas or MapInArrow) survives into the triples plan. Which
+    # kernel the detector itself runs is pinned by
+    # test_scale_detector_kernel_by_dictionary.
     n_mat = plan.count("InMemoryTableScan") + plan.count("Scan ExistingRDD")
     assert n_mat >= 6, plan[:800]
     assert "MapInPandas" not in plan and "MapInArrow" not in plan, plan[:800]
+
+
+@pytest.mark.parametrize(
+    "surfaces, kernel, absent",
+    [
+        (["join", "scan_rows", "Spark3"], "MapInArrow", "MapInPandas"),
+        (["join", "read frame"], "MapInPandas", "MapInArrow"),  # multi-token
+        (["join", "lib.core"], "MapInPandas", "MapInArrow"),  # punctuated
+    ],
+)
+def test_scale_detector_kernel_by_dictionary(spark, surfaces, kernel, absent):
+    """The scale detector's physical stage follows from the dictionary
+    alone: the batch Arrow kernel for token-only surfaces, Aho-Corasick
+    otherwise. Both produce the same rows, so only the plan can show
+    which one ran."""
+    from bio_re_with_entity_embeddings_spark.operators import mentions as M
+
+    docs = spark.createDataFrame(
+        [("d1", "join read frame lib.core")], "doc_id string, content string"
+    )
+    entries = [(s, f"E:{i}", "t") for i, s in enumerate(surfaces)]
+    idx = {eid: i + 1 for i, (_, eid, _) in enumerate(entries)}
+    plan = plan_of(M.detect_entity_arrays(docs, entries, idx))
+    assert kernel in plan and absent not in plan, plan
+
+
+def test_entity_dim_is_local_relation(spark):
+    """The scale path's entity dim plans as a local table scan: built
+    from a Python list it would run a Python-RDD job on every action."""
+    from bio_re_with_entity_embeddings_spark.plans import pipeline
+
+    dim = pipeline.entity_dim(spark, {"E:a": 1, "E:b": 2})
+    plan = plan_of(dim)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert dim.schema.simpleString() == "struct<idx:int,entity_id:string>"
+    assert sorted(map(tuple, dim.collect())) == [(1, "E:a"), (2, "E:b")]
 
 
 def test_whole_stage_codegen_in_aggregates(spark):
@@ -83,6 +124,21 @@ def test_no_row_python_udfs_in_package():
             offenders.append(py.name)
         if re.search(r"\.rdd\b|parallelize\(", src):
             offenders.append(py.name + " (RDD)")
+    assert not offenders, offenders
+
+
+def test_no_env_gated_detector():
+    """One scale detector, chosen from the dictionary: an env-gated
+    alternate once made the Arrow kernel unreachable by default while
+    every parity test stayed green. operators/mentions.py reads no
+    environment, and no detector switch variable exists in the package."""
+    src = (PKG / "operators" / "mentions.py").read_text()
+    assert not re.search(r"\bos\.environ\b|\bgetenv\(", src)
+    offenders = [
+        str(py.relative_to(PKG))
+        for py in PKG.rglob("*.py")
+        if re.search(r"SPARK_GRAFT_\w*DETECTOR", py.read_text())
+    ]
     assert not offenders, offenders
 
 
